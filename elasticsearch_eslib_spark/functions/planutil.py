@@ -32,6 +32,8 @@ interpreted path — also measured, 13 s vs 7 s on the same stage).
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 _BARRIER_COL = "__nd_barrier"
@@ -52,6 +54,16 @@ def conf_bytes(spark, key: str) -> int:
     return int(v)
 
 
+def local_path(uri: str) -> str:
+    """The filesystem path of a local `file:` URI (`file:/x` and
+    `file:///x` both → `/x`). Raises ValueError for any other scheme and
+    for a URI naming a host (`file://host/x` is not on this machine)."""
+    u = urlparse(uri)
+    if u.scheme != "file" or u.netloc:
+        raise ValueError(f"not a local file URI: {uri}")
+    return unquote(u.path)
+
+
 def spread(df: DataFrame, by: str = "doc_id") -> DataFrame:
     """Repartition up ONLY when the input SCAN is under-parallel (a small
     local file → 1-2 tasks would serialize the CPU-heavy map work that
@@ -69,7 +81,8 @@ def spread(df: DataFrame, by: str = "doc_id") -> DataFrame:
     DataFrame to an RDD builds the physical plan through py4j and costs
     ~0.1-0.2 s PER CALL at the driver — ~1 s across the query suite for a
     3 ms piece of information (inputFiles + getsize). Non-local files
-    (no file: scheme) fall back to the exact RDD probe."""
+    (no file: scheme, or a file: URI naming a host) fall back to the exact
+    RDD probe."""
     spark = df.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
@@ -82,14 +95,8 @@ def spread(df: DataFrame, by: str = "doc_id") -> DataFrame:
         # 4 MB files at mpb=8 MB: actual 40, unpadded estimate 20) and
         # would trigger a corpus-wide repartition the old probe skipped
         ocb = conf_bytes(spark, "spark.sql.files.openCostInBytes")
-        total = 0
-        for f in df.inputFiles():
-            if not f.startswith("file:"):
-                raise ValueError(f)
-            path = f[len("file:"):]
-            while path.startswith("//"):  # file:///x and file:/x both → /x
-                path = path[1:]
-            total += os.path.getsize(path) + ocb
+        total = sum(os.path.getsize(local_path(f)) + ocb
+                    for f in df.inputFiles())
         n_scan = max(1, -(-total // mpb))
     except Exception:
         n_scan = df.rdd.getNumPartitions()

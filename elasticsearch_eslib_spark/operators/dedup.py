@@ -304,6 +304,33 @@ def lsh_candidate_pairs(sigs: DataFrame,
     return full.unionByName(star).distinct()
 
 
+def verify_candidates(cand: DataFrame, packed: DataFrame,
+                      jaccard_threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the candidate pairs `cand` (doc_a,
+    doc_b) whose exact shingle Jaccard is ≥ the threshold, from `packed`
+    (doc_id, shs, n_sh): each doc's distinct shingles as one array row."""
+    from elasticsearch_eslib_spark.functions.planutil import filter_once
+
+    pa = packed.select(F.col("doc_id").alias("doc_a"),
+                       F.col("shs").alias("shs_a"),
+                       F.col("n_sh").alias("n_a"))
+    pb = packed.select(F.col("doc_id").alias("doc_b"),
+                       F.col("shs").alias("shs_b"),
+                       F.col("n_sh").alias("n_b"))
+    scored = (cand.join(pa, "doc_a").join(pb, "doc_b")
+              .withColumn("n_inter",
+                          F.size(F.array_intersect("shs_a", "shs_b"))
+                          .cast("long"))
+              .withColumn("jaccard", F.round(
+                  F.col("n_inter")
+                  / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6)))
+    # filter_once: an unbarriered threshold filter folds into the pb join
+    # condition, re-running the array_intersect per candidate outside the
+    # stage codegen and again in the projection (see planutil)
+    return (filter_once(scored, F.col("jaccard") >= jaccard_threshold)
+            .select("doc_a", "doc_b", "jaccard"))
+
+
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
                       jaccard_threshold: float = 0.5) -> DataFrame:
     """LSH candidate pairs verified by exact shingle Jaccard.
@@ -349,26 +376,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
                        do_spread=False)
                    .select("doc_id", "shs", F.size("shs").alias("n_sh"))
                    .persist())
-    pa = packed_cand.select(F.col("doc_id").alias("doc_a"),
-                            F.col("shs").alias("shs_a"),
-                            F.col("n_sh").alias("n_a"))
-    pb = packed_cand.select(F.col("doc_id").alias("doc_b"),
-                            F.col("shs").alias("shs_b"),
-                            F.col("n_sh").alias("n_b"))
-    from elasticsearch_eslib_spark.functions.planutil import filter_once
-
-    scored = (cand.join(pa, "doc_a").join(pb, "doc_b")
-              .withColumn("n_inter",
-                          F.size(F.array_intersect("shs_a", "shs_b"))
-                          .cast("long"))
-              .withColumn("jaccard", F.round(
-                  F.col("n_inter")
-                  / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6)))
-    # filter_once: an unbarriered threshold filter folds into the pb join
-    # condition, re-running the array_intersect per candidate outside the
-    # stage codegen and again in the projection (see planutil)
-    out = (filter_once(scored, F.col("jaccard") >= jaccard_threshold)
-           .select("doc_a", "doc_b", "jaccard"))
+    out = verify_candidates(cand, packed_cand, jaccard_threshold)
     # materialize the (small) result so the candidate cache can be
     # released NOW — round 2 leaked cached blocks for the session lifetime
     # (each bench rep re-accumulated executor storage). `sigs` is NOT

@@ -167,8 +167,20 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                           * F.col("tf") * (BM25_K1 + 1.0)
                           / (F.col("tf") + BM25_K1 * (1.0 - BM25_B + BM25_B
                              * F.col("dl") / F.col("__avg_dl")))))
-    return (scored.groupBy("query_id", "doc_id")
-            .agg(F.sum("part").alias("score")))
+    out = scored.groupBy("query_id", "doc_id").agg(F.sum("part").alias("score"))
+    # fail loud on an empty corpus: with no doc holding a token avg_dl is
+    # NULL and nothing can be scored, so the result would be silently
+    # empty. The stats row rides the output as a union branch that is
+    # always filtered out and raises when avg_dl is NULL. Not on the
+    # broadcast side: AQE drops a join whose stream side ran empty
+    # without waiting for its broadcast. The branch reuses the stats
+    # exchange, so it adds no corpus pass.
+    guard = stats.where(
+        F.when(F.col("__avg_dl").isNull(), F.raise_error(F.lit(
+            "bm25: empty corpus (no document has a token), avg_dl "
+            "is undefined"))).otherwise(F.col("__n_docs") < 0))
+    return out.unionByName(guard.select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in out.schema]))
 
 
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,11 +10,15 @@ self-check required by SURVEY.md Q5 and tested in test_bm25_topk.py):
     block-max metadata skips blocks, survivors are fully evaluated with
     contributions summed in term_id order (pinned float64 determinism).
 
-Scale notes: query-term lists are tiny (collected to the driver only to
-build an `isin` predicate that prunes the postings scan down to a few
-parquet partitions/row-groups — p_bucket directory pruning + term_id
-min/max stats). Scoring needs no join against the docs table because
-doc_len is packed inside each block (see build.py).
+Scale notes: a query batch is a handful of short strings, so the
+analyzer runs on the driver over the collected query list (no Python UDF
+stage, whose fixed cost dwarfs the work on a few rows), and the analyzed
+terms are a driver-built local relation. The term list then builds an
+`isin` predicate for one pruned vocabulary lookup, and the resolved term
+ids prune the postings scan down to a few parquet partitions/row-groups
+(p_bucket directory pruning + term_id min/max stats). Scoring needs no
+join against the docs table because doc_len is packed inside each block
+(see build.py).
 """
 
 from __future__ import annotations
@@ -23,6 +27,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from elasticsearch_eslib_spark import schemas
@@ -32,44 +37,57 @@ from elasticsearch_eslib_spark.functions.codec import decode_posting_block
 
 N_POSTING_BUCKETS = 32  # p_bucket = term_id % N_POSTING_BUCKETS (write + prune)
 
+# Arrow schemas of the two driver-built local relations of Q1/Q2
+_QTERMS_ARROW = pa.schema([("query_id", pa.int64()), ("k", pa.int32()),
+                           ("term", pa.string())])
+_MATCHED_ARROW = pa.schema([("term", pa.string()), ("term_id", pa.int64()),
+                            ("df", pa.int64())])
+
 
 def analyze_queries(queries: DataFrame) -> DataFrame:
     """Q1: (query_id, query, k) → (query_id, k, term) distinct terms.
 
     Queries are analyzed with lang='en' (pinned, FIXTURES.md §2); duplicate
     query terms contribute once (pinned semantic, oracle.py).
-    """
 
-    def _an(iterator):
-        for pdf in iterator:
-            rows = {"query_id": [], "k": [], "term": []}
-            for qid, q, k in zip(pdf["query_id"], pdf["query"], pdf["k"]):
-                for term in sorted(set(analyze_text(q, "en"))):
-                    rows["query_id"].append(qid)
-                    rows["k"].append(k)
-                    rows["term"].append(term)
-            yield pd.DataFrame(rows)
-
-    return queries.mapInPandas(_an, schema="query_id long, k int, term string")
+    The query rows are collected once and analyzed on the driver: a query
+    batch is a handful of short strings, and a Python UDF stage's fixed
+    cost (worker start, Arrow round trip) dwarfs the analyzer work on a
+    few rows. The result is an Arrow-built local relation, which plans as
+    a `LocalTableScan`: every later use of it (the term lookup, each
+    broadcast of the resolved terms) reads driver memory instead of
+    re-running a job."""
+    cols = {"query_id": [], "k": [], "term": []}
+    for qid, q, k in queries.select("query_id", "query", "k").collect():
+        for term in sorted(set(analyze_text(q, "en"))):
+            cols["query_id"].append(qid)
+            cols["k"].append(k)
+            cols["term"].append(term)
+    return queries.sparkSession.createDataFrame(
+        pa.table(cols, schema=_QTERMS_ARROW))
 
 
 def resolve_query_terms(qterms: DataFrame, terms: DataFrame,
                         n_docs: int) -> DataFrame:
     """Q2: attach term_id/df/idf. Unknown terms drop out (inner join).
 
-    The matched vocabulary rows (≤ #query terms — driver metadata, like
-    the term list itself) are collected once and re-broadcast as a local
-    relation: downstream consumers (fetch_postings' prune list, the WAND
-    fan-out rule keyed on max df) read them straight off the returned
-    DataFrame's `_resolved_term_ids` / `_resolved_max_df` instead of each
-    paying another action that would re-run the analyze+join pipeline."""
+    The analyzed terms (a local relation from `analyze_queries`) are read
+    on the driver to build the `isin` predicate of ONE pruned vocabulary
+    lookup. The matched rows (≤ #query terms — driver metadata, like the
+    term list itself) come back as a second local relation, and the
+    returned plan is the broadcast join of the two: wherever it is used,
+    it reads driver memory instead of re-running the analyzer and the
+    lookup. Downstream consumers (fetch_postings' prune list, the WAND
+    fan-out rule keyed on max df) read `_resolved_term_ids` /
+    `_resolved_max_df` off the returned DataFrame instead of paying
+    another action."""
     spark = qterms.sparkSession
-    term_list = [r["term"] for r in qterms.select("term").distinct().collect()]
+    term_list = sorted({r["term"] for r in qterms.select("term").collect()})
     matched_rows = (terms.where(F.col("term").isin(term_list))
                     .select("term", "term_id", "df").collect()
                     if term_list else [])
-    matched = spark.createDataFrame(
-        matched_rows, "term string, term_id long, df long")
+    matched = spark.createDataFrame(pa.Table.from_pylist(
+        [r.asDict() for r in matched_rows], schema=_MATCHED_ARROW))
     resolved = (qterms.join(F.broadcast(matched), "term")
                 .withColumn("idf", F.log(
                     (F.lit(float(n_docs)) - F.col("df") + 0.5)

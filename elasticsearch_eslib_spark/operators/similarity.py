@@ -246,10 +246,9 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str,
     # quadratic-in-occupancy cost) evaluates a single dot per candidate
     # instead of three — sqrt(dot(e,e)) per row is the identical double it
     # was per pair, so the rounded cosine (and the oracle hash) is
-    # unchanged. The cosine filter folds into the join condition, where it
-    # is now a codegen'd unrolled chain, not an interpreted fold.
-    from elasticsearch_eslib_spark.functions.planutil import filter_once
-
+    # unchanged. The dot is a codegen'd unrolled chain, not an interpreted
+    # fold, and bucket_pairs keeps the cosine filter out of the join
+    # condition.
     # spread: the pair stage (the quadratic-in-occupancy cost) runs on the
     # STREAM side's partitions; the single-row-group local file scans 1-2
     # wide and would serialize it on 2 of 32 slots (no-op on a many-file
@@ -257,6 +256,15 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str,
     emb = spread(load_embeddings(spark, sf_dir), "vec_id").withColumn(
         "bucket", lsh_bucket_expr("embedding", n_planes)).withColumn(
         "nrm", _norm("embedding"))
+    return bucket_pairs(emb, threshold)
+
+
+def bucket_pairs(emb: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, cosine) for the pairs vec_a < vec_b of `emb` rows
+    (vec_id, embedding, bucket, nrm) that share a bucket, with rounded
+    cosine ≥ threshold."""
+    from elasticsearch_eslib_spark.functions.planutil import filter_once
+
     a, b = emb.alias("a"), emb.alias("b")
     pairs = (a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
                     & (F.col("a.vec_id") < F.col("b.vec_id")))

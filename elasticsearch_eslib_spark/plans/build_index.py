@@ -84,7 +84,10 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
 
     # ------------------------------------------------------------- S1
     s1_fp = fp_input
-    if not io.is_done("tokenized", s1_fp):
+    # read BEFORE the stage runs: only a stage already committed for this
+    # input is a skip (after S1 commits, is_done is True on every build)
+    metrics["s1_skipped"] = io.is_done("tokenized", s1_fp)
+    if not metrics["s1_skipped"]:
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # A few large input files would serialize the Arrow/Python stage.
         # Fix it at the SCAN, not with a shuffle: size
@@ -188,7 +191,6 @@ def build_index(spark: SparkSession, pages_path: str, index_dir: str,
             spark.conf.set(mpb_key, mpb_old)
         io.commit_stage("tokenized", "tokenized", None, s1_fp,
                         metrics={"wall_ms": int((time.time() - t0) * 1000)})
-    metrics["s1_skipped"] = io.is_done("tokenized", s1_fp)
 
     tokenized = io.read("tokenized")
 

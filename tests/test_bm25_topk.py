@@ -274,3 +274,24 @@ def test_wand_auto_uses_resolved_max_df(spark, built_index, queries_df):
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
         for r in df.collect())
     assert key(wand) == key(exh)
+
+
+def test_stopword_and_absent_batch_is_empty(spark, built_index):
+    """A batch whose queries analyze to nothing (stopwords, punctuation,
+    empty) or only to terms absent from the vocabulary resolves zero
+    terms: both paths return no rows and raise nothing."""
+    from elasticsearch_eslib_spark.operators.query import (
+        topk_exhaustive, topk_wand,
+    )
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    index_dir, _ = built_index
+    idx = Index(spark, index_dir)
+    for batch in (["the of and", "", "!!!"],
+                  ["zzzabsentzzz", "the qqqnothereqqq"]):
+        qdf = spark.createDataFrame(
+            [(i, q, 10) for i, q in enumerate(batch)],
+            "query_id long, query string, k int")
+        args = (qdf, idx.terms, idx.postings, idx.n_docs, idx.avg_dl)
+        assert topk_wand(*args).collect() == []
+        assert topk_exhaustive(*args).collect() == []

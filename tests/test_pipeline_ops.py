@@ -548,3 +548,36 @@ def test_spread_decisions(spark, tmp_path):
         pd.DataFrame({"doc_id": [i]}).to_parquet(str(many / f"p{i}.parquet"))
     df2 = spark.read.parquet(str(many))
     assert spread(df2) is df2  # enough padded splits → no-op
+
+
+
+def test_bm25_topk_fails_loud_on_empty_corpus(spark, tmp_path):
+    """No document holds a token, so avg_dl is undefined: bm25_topk raises
+    instead of returning a silently empty ranking. A corpus whose tokens
+    miss every query term still answers empty, without an error."""
+    import pandas as pd
+
+    from elasticsearch_eslib_spark.operators.fulltext import bm25_topk
+
+    for name, texts in (("empty", ["", "  "]), ("nomatch", ["foo bar", "baz"])):
+        (tmp_path / name).mkdir()
+        pd.DataFrame({"doc_id": [1, 2], "text": texts}).to_parquet(
+            str(tmp_path / name / "documents.parquet"))
+    with pytest.raises(Exception, match="empty corpus"):
+        bm25_topk(spark, str(tmp_path / "empty")).collect()
+    assert bm25_topk(spark, str(tmp_path / "nomatch")).collect() == []
+
+def test_local_path_parses_file_uris():
+    """spread() sizes local scans from the files' URIs: both spellings of
+    a local file URI give the path (percent-escapes decoded); a URI that
+    names a host, or another scheme, is refused, so spread() falls back
+    to the RDD probe instead of stat-ing a wrong local path."""
+    from elasticsearch_eslib_spark.functions.planutil import local_path
+
+    assert local_path("file:/x/p.parquet") == "/x/p.parquet"
+    assert local_path("file:///x/p.parquet") == "/x/p.parquet"
+    assert local_path("file:///x/a%20b.parquet") == "/x/a b.parquet"
+    for uri in ("file://host/x/p.parquet", "hdfs://nn/x/p.parquet",
+                "/x/p.parquet"):
+        with pytest.raises(ValueError):
+            local_path(uri)

@@ -209,3 +209,80 @@ def test_ann_bruteforce_broadcasts_queries(spark):
         pytest.skip("driver testdata absent")
     plan = _fmt(ann_bruteforce_topk(spark, sf))
     assert "BroadcastExchange" in plan, plan
+
+
+def test_query_path_runs_no_python_stage(spark, built_index):
+    """Q1/Q2 analyze the query list on the driver: the resolved terms are
+    a broadcast join of two local relations, with no Python UDF stage that
+    every later use of the frame (each broadcast of it) would re-run."""
+    from elasticsearch_eslib_spark.fixtures import gen_queries
+    from elasticsearch_eslib_spark.operators.query import (
+        analyze_queries, resolve_query_terms,
+    )
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    index_dir, _ = built_index
+    idx = Index(spark, index_dir)
+    qdf = spark.createDataFrame(gen_queries())
+    plan = _fmt(resolve_query_terms(analyze_queries(qdf), idx.terms,
+                                    idx.n_docs))
+    for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython"):
+        assert node not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_single_query_wand_job_count(spark, built_index):
+    """One single-query request is at most 6 Spark jobs: the query-row
+    collect, the pruned vocabulary lookup, the two broadcasts of the
+    resolved terms and the WAND shuffle + result. Re-running the analyzer
+    stage for the distinct-term collect and for each broadcast made it 7,
+    three of which started the Python analyzer."""
+    from elasticsearch_eslib_spark.operators.query import topk_wand
+    from elasticsearch_eslib_spark.plans.build_index import Index
+
+    index_dir, _ = built_index
+    idx = Index(spark, index_dir)
+    qdf = spark.createDataFrame([(0, "T000123, t000456!", 10)],
+                                "query_id long, query string, k int")
+    sc = spark.sparkContext
+    sc.setJobGroup("single-query-jobcount", "single query job audit")
+    try:
+        rows = topk_wand(qdf, idx.terms, idx.postings, idx.n_docs,
+                         idx.avg_dl).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("single-query-jobcount")
+    assert rows
+    assert len(jobs) <= 6, f"expected ≤6 jobs per request, saw {len(jobs)}"
+
+
+def _join_conditions(plan: str) -> list[str]:
+    return re.findall(r"Join condition\s*:\s*(.*)", plan)
+
+
+def test_filter_once_keeps_pair_scores_out_of_join_conditions(spark):
+    """The near-dup verify (shingle Jaccard) and the embedding near-dup
+    (cosine) filter their pair score above the join: without the
+    filter_once barrier Catalyst folds the threshold into the join
+    condition, where the array_intersect / unrolled element_at dot runs
+    per candidate pair outside codegen and again in the projection."""
+    from elasticsearch_eslib_spark.operators.dedup import verify_candidates
+    from elasticsearch_eslib_spark.operators.similarity import (
+        EMB_DIM, bucket_pairs,
+    )
+
+    cand = spark.createDataFrame([(1, 2), (1, 3)], "doc_a long, doc_b long")
+    packed = spark.createDataFrame(
+        [(1, ["a b c", "b c d"], 2), (2, ["a b c"], 1), (3, ["x y z"], 1)],
+        "doc_id long, shs array<string>, n_sh int")
+    emb = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(EMB_DIM)], i % 2, 1.0)
+         for i in range(4)],
+        "vec_id long, embedding array<float>, bucket long, nrm double")
+    for df in (verify_candidates(cand, packed, 0.5), bucket_pairs(emb, 0.35)):
+        plan = _fmt(df)
+        conds = _join_conditions(plan)
+        assert conds, plan
+        for cond in conds:
+            assert "element_at" not in cond, cond
+            assert "array_intersect" not in cond, cond

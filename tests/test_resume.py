@@ -38,6 +38,8 @@ def test_resume_after_injected_failure(spark, pages_parquet, built_index,
 
     metrics = build_index(spark, pages_parquet, resumed_dir, resume=True)
     assert metrics["n_docs"] == 1000
+    # S1 was resumed (its remaining groups ran), not skipped
+    assert not metrics["s1_skipped"]
 
     # resumed lineage covers all buckets exactly once
     with open(os.path.join(resumed_dir, "_manifest.json")) as fh:
@@ -107,8 +109,10 @@ def test_lineage_df_matches_declared_schema(spark, built_index):
 
 
 def test_resume_noop_when_complete(spark, pages_parquet, built_index):
-    """Re-running with resume=True on a finished index skips every stage."""
-    index_dir, _ = built_index
+    """Re-running with resume=True on a finished index skips every stage;
+    the cold build that made it did not skip S1."""
+    index_dir, cold_metrics = built_index
+    assert not cold_metrics["s1_skipped"]
     with open(os.path.join(index_dir, "_manifest.json")) as fh:
         before = json.load(fh)["stages"]
     metrics = build_index(spark, pages_parquet, index_dir, resume=True)
